@@ -1,35 +1,34 @@
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark harness: times the registry on $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Runs a representative spread of the registry (relational, window, events,
-ETL, LLM-pipeline ops) on local[$SPARK_GRAFT_CPUS] and prints TWO JSON
-lines: first the full result including the per-query map
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-then a compact summary (same fields, `slowest5` instead of `queries`) as
-the LAST line — the driver preserves only the final ~2000 bytes of stdout
-and parses the last line, so the headline `value` must live on a line that
-fits that tail. The summary also carries two machine calibrations (CPU
-xxhash chain + memory/shuffle-bound exchange), each re-measured
-post-battery, driver-JVM GC totals and code-cache usage (with the
-harness's own forced-GC time split out as `gc_forced_ms`), and `hq_cs` —
-the 28 headline per-query timings in centiseconds as a positional array
-in HEADLINE order, so a driver-side headline move is attributable to
-named queries from the BENCH file alone (VERDICT r11 item 1) — see the
-comments in main().
+Run:
+    SPARK_GRAFT_SF_DIR=path/to/sf0.01 python bench.py
 
-Each query is forced through the `noop` sink — full distributed execution,
-zero driver-side collection — so the timing reflects what a cluster would do,
-not a toPandas() transfer.
+Every query is forced through the `noop` sink (full distributed execution,
+no driver-side collection) on local[$SPARK_GRAFT_CPUS]. Each timing is the
+MIN of 2 back-to-back runs, with `clear_caches` and a forced full JVM GC
+between runs, outside the timed window: without the GC, shuffle-heavy
+queries inherit their predecessors' heap and run up to 4x slower, and
+single-shot timings on shared VMs carry about ±30% noise.
 
-Methodology (r3): each query is timed as the MIN of 2 back-to-back runs,
-with `clearCache()` + a forced full JVM GC between timed runs. Rationale,
-measured on the r3 machine: (a) without the GC, shuffle-heavy queries
-inherit predecessors' uncollected heap and run up to 4× slower (46s → 12s
-for docs_minhash_lsh after 8 preceding queries); (b) single-shot timings
-on these per-round VMs carry ±30% noise that swamps real round-over-round
-movement. Min-of-2 from a clean heap is the steady state a long-running
-cluster job actually sees; the per-round BENCH files are comparable only
-within a machine either way (the r3 VM measured ~1.3× slower than r2's on
-identical code).
+The 28 HEADLINE queries are timed first; their sum is the headline
+`value`. Then every other registered query whose declared inputs exist is
+timed, one family per defining registry module
+(`value_extended_<module>`, see `families`).
+
+Stdout carries TWO JSON lines (Spark logs go to stderr):
+
+1. the full record: the summary below plus `queries` (every timed query,
+   seconds, 3 decimals), one `value_extended_<module>` subtotal per
+   family, `slowest5`, and `family_t0` (wall-clock start of each family,
+   to place a mid-battery VM stall in time);
+2. the LAST line, a compact summary for readers that keep only the final
+   ~2000 bytes of stdout: metric/value/unit/headline_n, `hq_cs` (headline
+   timings in centiseconds, in HEADLINE order), the CPU and memory
+   calibrations before and after the battery, driver-JVM GC and
+   code-cache totals (`gc_forced_ms` is the harness's own forced-GC
+   time), `sf`, and `queries`, the named 28-query headline map. If that
+   line would exceed LAST_LINE_CAP bytes, the map is dropped and
+   `"queries_dropped": true` marks it (see `last_line`).
 """
 
 from __future__ import annotations
@@ -82,656 +81,38 @@ HEADLINE = [
     "deterministic_sample",
 ]
 
-# Round-2 operator families, timed ALONGSIDE the headline set (the 28-query
-# headline total stays comparable round-over-round; these report separately
-# as value_extended / queries keys).
-EXTENDED = [
-    "part_rad_backref",
-    "snapshot_diff_customers",
-    "range_band_join_orders",
-    "rollup_multi_resolution",
-    "docs_pack_sequences",
-    "emb_label_centroids",
-    "graph_pagerank_fixedpoint",
-    "part_name_neardup",
-    "docs_simhash",
-]
 
-# Round-3 operator additions, tracked as their own family (headline and
-# extended sums stay comparable round-over-round). docs_curation_funnel
-# and docs_leakage_safe_split are deliberately absent: they are
-# compositions of already-benched primitives (minhash + connected
-# components), so benching them would double-count the dominant cost.
-EXTENDED_R3 = [
-    "docs_repetition_filter",
-    "docs_boilerplate_share",
-    "emb_scalar_quantize",
-    "docs_incremental_neardup",
-    "schema_evolution_merge",
-    "dynamic_partition_overwrite",
-    "events_resample_ffill",
-]
+# The final stdout line must survive a reader that keeps only the last
+# ~2000 bytes (BENCH_r05's single 5 KB line lost its head, `value` too).
+LAST_LINE_CAP = 1980
 
 
-# Round-5 operator additions (registry/round5_ops.py), their own family so
-# prior sums stay comparable.
-EXTENDED_R5 = [
-    "docs_chunk_dedup",
-    "docs_reservoir_sample_per_lang",
-    "events_rolling_wau",
-    "sketch_hll_daily_merge",
-    "zorder_layout_orders",
-    "emb_pq_quantize",
-    "bloom_prune_semijoin",
-    "dq_expectations_report",
-    "docs_vocab_coverage",
-    "interval_bin_join_events",
-    "docs_setsim_prefix_join",
-]
+def families(registry: dict) -> dict[str, list[str]]:
+    """Every runnable non-headline query, grouped by defining module.
+
+    Keys are `value_extended_<module>` in module order; names within a
+    family are in name order. A query whose declared inputs are missing is
+    left out (it cannot run here)."""
+    out: dict[str, list[str]] = {}
+    for name in sorted(registry):
+        qd = registry[name]
+        if name in HEADLINE or qd.missing_inputs():
+            continue
+        module = qd.fn.__module__.rsplit(".", 1)[-1]
+        out.setdefault(f"value_extended_{module}", []).append(name)
+    return dict(sorted(out.items()))
 
 
-# Round-5c curation/analytics additions (registry/curation_ops.py), their
-# own family so prior sums stay comparable. dq_observe_metrics is absent:
-# its noop-write action runs eagerly inside the builder, so the generic
-# sink-timing harness would double-write it. Also deliberately absent:
-# docs_minhash_estimator_error and docs_lexical_semantic_agreement
-# (compositions re-running the already-benched MinHash pipeline — benching
-# them double-counts its dominant cost, the docs_curation_funnel
-# rationale), and the sub-second eval ops (ivf recall, hamming, benford,
-# backtest, multitouch) whose gate timings at sf0.01 characterize them.
-EXTENDED_R5C = [
-    "docs_cross_source_overlap",
-    "docs_bigram_lm_score",
-    "docs_inverted_index_segments",
-    "part_skyline_pareto",
-    "orders_calendar_densify",
-    "events_attribution_last_touch",
-    "lineitem_winsorized_stats",
-    "events_cms_heavy_hitters",
-    "events_ewma_smoothing",
-    "nation_supplier_hhi",
-    "multimodal_frame_sample",
-]
-
-
-# Round-5d maintenance/analytics additions (registry/round5d_ops.py),
-# their own family so prior sums stay comparable. Deliberately absent:
-# graph_kcore_decomposition (re-runs the already-benched
-# part_name_neardup levenshtein join — the docs_curation_funnel
-# double-count rationale) and stream_ivm_rollup_maintenance (streaming
-# replay whose wall time is dominated by fixed micro-batch scheduling
-# overhead, not data volume, and which materializes checkpoint/state
-# dirs as a side effect — timing it would measure the trigger loop).
-EXTENDED_R5D = [
-    "files_compaction_plan",
-    "events_cusum_changepoint",
-    "events_second_order_transitions",
-    "lineitem_mad_outliers",
-    "orders_ivm_partial_agg_merge",
-    "docs_bm25_topk",
-    "emb_hamming_rerank_cascade",
-    "gdpr_erasure_cascade",
-    "part_knn_graph_stats",
-    "sql_recursive_hierarchy",
-    "events_active_streaks",
-    "part_brand_ols_slope",
-    "emb_kmeans_lloyd",
-    "orders_cohort_ltv_curve",
-    "docs_ngram_novelty_decay",
-    "supplier_shared_customer_graph",
-    "events_cdc_net_changes",
-    "events_funnel_windowed_24h",
-    "join_skew_diagnostics",
-    "events_cep_click_after_view_no_error",
-    "emb_dim_variance_profile",
-    "orders_backlog_sweepline",
-    "udtf_dynamic_split_words",
-    "lineitem_ks_two_sample",
-    "nation_mix_shift_decomposition",
-    "part_laspeyres_price_index",
-    "events_bot_detection_rules",
-    "customer_decile_migration",
-    "lineitem_anova_two_way",
-    "events_diff_in_differences",
-    "docs_bpe_first_merge",
-]
-
-
-# Round-6 additions (registry/round6_ops.py), their own family so prior
-# sums stay comparable. Deliberately absent: the txn trio
-# (txn_snapshot_merge_upsert, txn_time_travel_read, txn_vacuum_retention)
-# and stream_txn_exactly_once_sink — their builders run the commit
-# protocol / streaming replay eagerly (temp-dir writes + bounded
-# collects), so the generic sink-timing harness would re-run the side
-# effects and time the control plane, not a query — and
-# events_funnel_wilson_ci (three count() actions in the builder).
-EXTENDED_R6 = [
-    "events_shapley_channel_attribution",
-    "events_ab_cuped_adjustment",
-    "docs_rake_keyphrases",
-    "orders_weighted_percentile_exact",
-    "emb_ivf_pq_adc_topk",
-    "orders_mann_whitney_u",
-    "docs_curriculum_buckets",
-    "emb_label_centroid_drift",
-    "docs_hybrid_rrf_fusion",
-    "multimodal_audio_frame_energy",
-]
-
-
-# Round-6b continuation additions (registry/round6b_ops.py), their own
-# family so prior sums stay comparable. Deliberately absent:
-# txn_optimize_compact (commit-protocol side effects, the txn-trio
-# rationale). orders_holt_recursive_forecast IS timed: its bounded
-# month-grain collect + driver recurrence is the query's real cost
-# shape, side-effect-free and idempotent under min-of-2.
-EXTENDED_R6B = [
-    "sketch_kmv_set_ops",
-    "orders_gini_best_split_stump",
-    "docs_mixture_sampling_plan",
-    "asof_nearest_event_join",
-    "graph_label_propagation",
-    "docs_kanon_shingle_suppression",
-    "emb_cosine_threshold_sweep",
-    "files_zone_map_prune_stats",
-    "events_linear_interp_resample",
-    "orders_holt_recursive_forecast",
-    "minhash_band_planner",
-    "part_theilsen_trend",
-    "emb_top_pc_power_iteration",
-    "multimodal_image_patch_stats",
-    "part_fisher_price_index",
-    "docs_winnowing_fingerprints",
-    "graph_link_prediction_jaccard",
-    "docs_dup_substring_spans",
-    "docs_langid_confusion",
-    "events_ab_srm_check",
-    "events_conversion_path_topk",
-    "graph_modularity_communities",
-    "events_dau_mau_stickiness",
-    "events_slo_burn_alerts",
-    "events_fano_burstiness",
-    "docs_zipf_rank_freq",
-    "nation_trade_balance",
-    "events_interpurchase_profile",
-    "emb_norm_profile",
-    "docs_heaps_hapax_curve",
-    "events_markov_stationary_power",
-]
-
-# Round-6c governance/statistics additions (registry/round6c_ops.py).
-# Deliberately absent: pyds_stream_events_replay (streaming replay —
-# same trigger-loop-dominated rationale as stream_ivm_rollup_maintenance).
-EXTENDED_R6C = [
-    "events_autocorrelation",
-    "emb_semantic_dedup",
-    "customer_kanon_generalize",
-    "docs_domain_cap_sample",
-    "lineitem_jackknife_ratio",
-    "emb_hard_negative_mining",
-]
-
-# Round-6d robust-stats/resampling additions (registry/round6d_ops.py).
-EXTENDED_R6D = [
-    "events_mad_outlier_bounds",
-    "orders_psi_drift",
-    "orders_bootstrap_ci_poisson",
-    "docs_char_entropy",
-    "emb_jl_projection_distortion",
-    "lineitem_seasonal_decompose",
-]
-
-# Round-6e ML-eval/feature/governance additions (registry/round6e_ops.py).
-EXTENDED_R6E = [
-    "orders_lift_gain_curve",
-    "customer_feature_matrix",
-    "lineitem_discount_qty_ols",
-    "gdpr_subject_access_extract",
-    "orders_xmr_control_chart",
-    "docs_normalization_collapse",
-]
-
-# Round-6f reconciliation/profiling/testing additions
-# (registry/round6f_ops.py).
-EXTENDED_R6F = [
-    "orders_lineitem_reconciliation",
-    "orders_column_profile",
-    "nation_budget_largest_remainder",
-    "docs_kwic_concordance",
-    "events_ab_sequential_monitor",
-    "emb_farthest_first_centers",
-]
-
-# Round-6g keyness/eval/audit additions (registry/round6g_ops.py).
-EXTENDED_R6G = [
-    "docs_source_keyness_g2",
-    "events_power_analysis_grid",
-    "emb_bucket_label_ari",
-    "orders_duplicate_payment_audit",
-    "events_gap_outage_report",
-    "events_salted_twophase_agg",
-]
-
-# Round-6h cohort/assortment/supply/text/embedding additions
-# (registry/round6h_ops.py).
-EXTENDED_R6H = [
-    "part_substitute_candidates",
-    "supplier_otif_scorecard",
-    "docs_pmi_collocations",
-    "emb_dimension_isotropy_audit",
-]
-
-# Round-6i planning/growth/supply/embedding additions
-# (registry/round6i_ops.py).
-EXTENDED_R6I = [
-    "part_type_eoq_plan",
-    "orders_yoy_growth",
-    "region_supply_locality",
-    "events_growth_accounting",
-    "emb_fisher_discriminant_ratio",
-    "events_user_behavior_entropy",
-]
-
-# Round-6j randomness/curation/procurement/layout additions
-# (registry/round6j_ops.py).
-EXTENDED_R6J = [
-    "orders_runs_test",
-    "docs_stopword_induction",
-    "part_single_source_risk",
-    "events_hourly_peaks",
-    "part_xyz_variability_classes",
-    "orders_partition_layout_advisor",
-]
-
-# Round-6k acquisition/index/profiling additions (registry/round6k_ops.py).
-EXTENDED_R6K = [
-    "customer_acquisition_pace",
-    "part_chained_price_index",
-    "orders_fd_discovery",
-]
-
-# Round-6l divergence/geometry/seasonality additions
-# (registry/round6l_ops.py).
-EXTENDED_R6L = [
-    "docs_js_divergence_sources",
-    "emb_pairwise_distance_histogram",
-    "orders_seasonal_strength_anova",
-]
-
-# Round-7a TPC-H completion over the derived partsupp dimension
-# (registry/round7_ops.py) — the full 22-query TPC-H surface now benches.
-EXTENDED_R7 = [
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "q12_latency_priority",
-    "q16_supplier_part_count",
-    "q20_surplus_stock_suppliers",
-]
-
-# Round-7b rank-statistics/inequality/HITS additions
-# (registry/round7b_ops.py).
-EXTENDED_R7B = [
-    "lineitem_spearman_rho",
-    "events_kruskal_wallis",
-    "events_welch_ttest",
-    "customer_lorenz_deciles",
-    "customer_theil_index",
-    "graph_hits_bipartite",
-]
-
-# Round-7c quality-model/trend/cluster-eval/elasticity/PPR additions
-# (registry/round7c_ops.py).
-EXTENDED_R7C = [
-    "docs_quality_linear_classifier",
-    "orders_cochran_armitage_trend",
-    "emb_silhouette_buckets",
-    "lineitem_cohens_d_matrix",
-    "part_price_elasticity_loglog",
-    "graph_ppr_seed_part",
-]
-
-# Round-7d textrank/MLM-plan/hashing/pipe-SQL/aging/OOD additions
-# (registry/round7d_ops.py).
-EXTENDED_R7D = [
-    "docs_textrank_keywords",
-    "docs_mlm_span_corruption_plan",
-    "events_feature_hashing_matrix",
-    "sql_pipe_syntax_revenue",
-    "orders_open_order_aging_snapshot",
-    "emb_mahalanobis_ood_diag",
-]
-
-# Round-7e index/EVT/assortativity/Croston/audit/fit additions
-# (registry/round7e_ops.py).
-EXTENDED_R7E = [
-    "part_tornqvist_price_index",
-    "events_peak_over_threshold_tail",
-    "graph_degree_assortativity",
-    "part_croston_intermittent_demand",
-    "lineitem_price_band_outliers",
-    "orders_totalprice_lognormal_fit",
-]
-
-# Round-7f bandit/drift/backtest/ANOVA/newsvendor additions
-# (registry/round7f_ops.py). Deliberately absent:
-# txn_concurrent_conflict_retry (runs the two-writer commit race
-# eagerly — the txn-trio rationale).
-EXTENDED_R7F = [
-    "events_ucb_arm_allocation",
-    "orders_wasserstein_year_drift",
-    "orders_forecast_scoreboard_mape",
-    "customer_segment_value_anova",
-    "part_newsvendor_stock_quantile",
-]
-
-# Round-7g shrinkage/sensitivity/RDD/retrieval/planner/experiment
-# additions (registry/round7g_ops.py).
-EXTENDED_R7G = [
-    "lineitem_return_rate_bayes_shrinkage",
-    "customer_churn_cutoff_sensitivity",
-    "lineitem_qty24_rdd_discount",
-    "docs_query_likelihood_retrieval",
-    "emb_ivf_sharding_plan",
-    "customer_ab_stratified_assignment",
-]
-
-# Round-7h video/burst/index-merge/TOPSIS/ensemble additions
-# (registry/round7h_ops.py).
-EXTENDED_R7H = [
-    "multimodal_video_scene_cuts",
-    "orders_kleinberg_burst_fold",
-    "docs_postings_segment_merge",
-    "supplier_topsis_scorecard",
-    "orders_anomaly_ensemble_votes",
-]
-
-# Round-7i synthetic-control/CVaR/DP/Holt-Winters/elasticity/nDCG
-# additions (registry/round7i_ops.py).
-EXTENDED_R7I = [
-    "part_promo_synthetic_control",
-    "orders_revenue_cvar_shortfall",
-    "docs_dp_count_release",
-    "orders_holtwinters_additive_fold",
-    "part_cross_price_elasticity",
-    "docs_retrieval_ndcg_eval",
-]
-
-# Round-7j IV/paired-test/rank-corr/sketch/profiling/calibration
-# additions (registry/round7j_ops.py).
-EXTENDED_R7J = [
-    "lineitem_iv_2sls_demand",
-    "customer_mcnemar_urgency_shift",
-    "lineitem_kendall_tau_b",
-    "events_ams_f2_sketch",
-    "dq_inclusion_dependency_profile",
-    "orders_brier_calibration",
-]
-
-# Round-7k NB-langid/kappa/symspell/BFS/Little's-law/l-diversity
-# additions (registry/round7k_ops.py).
-EXTENDED_R7K = [
-    "docs_nb_langid_eval",
-    "docs_kappa_langid_agreement",
-    "docs_symspell_suggest",
-    "graph_bfs_landmark_distances",
-    "orders_littles_law_audit",
-    "customer_l_diversity_audit",
-]
-
-# Round-7l Markov-attribution/Breusch-Pagan/(s,S)-policy/pinball/
-# Leontief/GROUP-BY-ALL additions (registry/round7l_ops.py).
-EXTENDED_R7L = [
-    "events_markov_removal_attribution",
-    "lineitem_breusch_pagan_test",
-    "part_ss_inventory_policy_sim",
-    "orders_pinball_loss_eval",
-    "nation_leontief_requirements",
-    "sql_group_by_all_revenue",
-]
-
-# Round-7m isotonic/drift/MI/causal/association/packing additions
-# (registry/round7m_ops.py).
-EXTENDED_R7M = [
-    "lineitem_isotonic_return_calibration",
-    "events_page_hinkley_drift",
-    "lineitem_discount_tax_mutual_info",
-    "customer_ipw_segment_effect",
-    "categorical_cramers_v_matrix",
-    "part_nfd_binpack_plan",
-]
-
-# Round-7n Viterbi/knapsack/HBOS/Granger/Borda/reconciliation
-# additions (registry/round7n_ops.py).
-EXTENDED_R7N = [
-    "events_viterbi_hmm_decode",
-    "part_knapsack_dp_plan",
-    "docs_hbos_outlier_topk",
-    "orders_granger_lag_causality",
-    "nation_borda_priority_consensus",
-    "orders_hierarchical_forecast_reconcile",
-]
-
-# Round-7o link-prediction/Shapley/HAC/anomaly/panel/decomposition
-# additions (registry/round7o_ops.py).
-EXTENDED_R7O = [
-    "graph_adamic_adar_suppliers",
-    "region_shapley_cost_allocation",
-    "orders_trend_newey_west_se",
-    "events_user_sequence_surprisal",
-    "lineitem_twfe_discount_effect",
-    "lineitem_oaxaca_blinder_gap",
-]
-
-# Round-7p recsys/state-space/LM-smoothing/long-memory/corpus/DTW
-# additions (registry/round7p_ops.py).
-EXTENDED_R7P = [
-    "part_item_item_cf_topk",
-    "orders_kalman_level_filter",
-    "docs_good_turing_smoothing",
-    "events_hurst_rescaled_range",
-    "docs_log_odds_fighting_words",
-    "events_dtw_hourly_profiles",
-]
-
-# Round-7q conformal/max-coverage/Levene/Chow/richness/LATERAL
-# additions (registry/round7q_ops.py).
-EXTENDED_R7Q = [
-    "lineitem_conformal_interval_coverage",
-    "customer_coverage_greedy_brands",
-    "lineitem_levene_variance_test",
-    "orders_chow_break_test",
-    "docs_yule_k_richness",
-    "sql_lateral_topn_per_nation",
-]
-
-# Round-7r burstiness/gravity/triplet/BPE/hazard/variance-bridge
-# additions (registry/round7r_ops.py).
-EXTENDED_R7R = [
-    "events_gap_burstiness_memory",
-    "nation_gravity_trade_fit",
-    "emb_triplet_margin_audit",
-    "docs_bpe_multi_merge",
-    "events_purchase_conversion_hazard",
-    "orders_price_volume_mix_bridge",
-]
-
-# Round-7s PII/stemming/lang-similarity/feedback/stylometry/proximity
-# additions (registry/round7s_ops.py).
-EXTENDED_R7S = [
-    "docs_pii_detect_redact",
-    "docs_light_stemmer_collapse",
-    "docs_lang_trigram_similarity",
-    "docs_rocchio_query_expansion",
-    "docs_burrows_delta_stylometry",
-    "docs_proximity_phrase_rank",
-]
-
-# Round-7t forensics/dq-drift/GESD/fiscal/subgroup/Greenwood
-# additions (registry/round7t_ops.py).
-EXTENDED_R7T = [
-    "orders_benford_second_digit",
-    "dq_profile_drift_halves",
-    "orders_gesd_outlier_rounds",
-    "orders_fiscal_445_calendar",
-    "lineitem_subgroup_discovery_beam",
-    "customer_survival_greenwood_ci",
-]
-
-# Round-7u chain-ladder/fairness/trade/screening/heavy-tail
-# additions (registry/round7u_ops.py).
-EXTENDED_R7U = [
-    "orders_chain_ladder_projection",
-    "customer_disparate_impact_audit",
-    "customer_equalized_odds_audit",
-    "nation_rca_specialization",
-    "docs_lexicon_filter_rates",
-    "events_powerlaw_alpha_mle",
-]
-
-# Round-7v sketch-sweep/entropy/price-forensics/switching/WINDOW/
-# dedup-sweep additions (registry/round7v_ops.py).
-EXTENDED_R7V = [
-    "events_cms_width_sweep",
-    "multimodal_payload_entropy_screen",
-    "part_price_endings_analysis",
-    "customer_brand_switching_matrix",
-    "sql_named_window_surface",
-    "docs_dedup_threshold_sweep",
-]
-
-# Round-7w assignment/two-sample/residuals/learning-curve/changepoint/
-# absorption additions (registry/round7w_ops.py).
-EXTENDED_R7W = [
-    "supplier_nation_greedy_assignment",
-    "emb_energy_distance_sample",
-    "orders_chi2_cell_residuals",
-    "part_experience_curve_slopes",
-    "orders_binary_segmentation_breaks",
-    "events_absorbing_expected_steps",
-]
-
-# Round-7x scan/ahash/calendar/multiple-testing/reciprocity/varbyte
-# additions (registry/round7x_ops.py).
-EXTENDED_R7X = [
-    "events_poisson_scan_statistic",
-    "multimodal_payload_ahash_dedup",
-    "orders_trading_day_adjustment",
-    "customer_segment_holm_ztests",
-    "nation_trade_reciprocity",
-    "docs_postings_varbyte_estimate",
-]
-
-# Round-7y classifier-eval/gravity-residual/ABC-migration/queue-sim
-# additions (registry/round7y_ops.py).
-EXTENDED_R7Y = [
-    "emb_nearest_centroid_confusion",
-    "nation_gravity_residual_pairs",
-    "part_abc_class_migration",
-    "orders_priority_preemption_sim",
-]
-
-# Round-7z reward/sampling-design/backtest/procurement additions
-# (registry/round7z_ops.py).
-EXTENDED_R7Z = [
-    "events_markov_reward_value",
-    "lineitem_neyman_allocation_plan",
-    "orders_expanding_window_cv",
-    "supplier_kraljic_quadrants",
-]
-
-# Round-7aa weekday-ANOVA/norm-profile/export-entropy additions
-# (registry/round7aa_ops.py).
-EXTENDED_R7AA = [
-    "orders_weekday_anova",
-    "emb_norm_profile_by_label",
-    "nation_export_entropy",
-]
-
-# Round-7ab overlap/encoding additions (registry/round7ab_ops.py).
-EXTENDED_R7AB = [
-    "part_price_bhattacharyya_overlap",
-    "orders_rle_compression_estimate",
-]
-
-# Round-8 additions, ALL batches in one family (one summary subtotal —
-# the driver keeps only the last ~2000 bytes of stdout, so per-batch
-# subtotal keys must stop growing; registry/round7ac_ops.py onward).
-# Deliberately absent from every bench family: pdf_real_lattice_goldens
-# (round 7) — it reads FIXED reference PDFs from /root/reference/docs,
-# so its wall time is constant in sf and benching it would dilute the
-# sf-scaled throughput signal the headline tracks; its correctness is
-# value-gated (pinned golden oracle) and its cost is characterized by
-# the gate timing (~7s cold, IO+extraction bound).
-EXTENDED_R8 = [
-    "events_ratio_metric_delta_method",
-    "orders_crps_ensemble_eval",
-    "customer_t_closeness_audit",
-    "orders_bloom_fpp_planner",
-    "lineitem_huber_m_estimator",
-    "graph_neighborhood_function_exact",
-    "lineitem_logistic_newton_step",
-    "graph_rich_club_coefficient",
-    "orders_sort_key_pruning_advisor",
-    "events_uplift_qini_by_segment",
-    "part_demand_adi_cv2_classes",
-    "docs_tokenizer_fertility_by_lang",
-    "lineitem_bitmap_index_plan",
-    "join_cardinality_estimate_audit",
-    "events_histogram_selectivity_audit",
-    "sql_pagination_offset_fetch",
-    "events_watermark_delay_planner",
-    "docs_readability_grade",
-    "nation_eigenvector_centrality_trade",
-    "orders_kingman_queue_estimate",
-    "customer_linkage_u_probabilities",
-    "orders_interval_coalesce_islands",
-    "docs_simhash_bit_balance_audit",
-    "events_retention_powerlaw_fit",
-    "docs_dedup_token_savings",
-    "events_session_timeout_sensitivity",
-    "dq_referential_orphan_audit",
-    "orders_data_vault_hash_keys",
-    "emb_second_pc_deflation",
-    "lineitem_quantile_regression_grid",
-    "docs_mixture_temperature_plan",
-    "orders_business_day_sla",
-    "orders_snapshot_vs_cdc_cost",
-    "orders_cumulative_distinct_customers",
-    "dq_freshness_staleness_audit",
-    "emb_knn_loo_accuracy",
-    "orders_luhn_check_digit_audit",
-    "events_circular_hour_concentration",
-    "dq_candidate_key_uniqueness",
-    "lineitem_cooks_group_influence",
-    "part_edge_ngram_autocomplete_plan",
-    "part_hotelling_t2_brands",
-    "lineitem_wls_discount_slope",
-    "orders_woe_iv_price_bins",
-    "orders_cube_view_selection_greedy",
-    "events_chao1_unseen_users",
-    "events_interrupted_time_series",
-    "docs_lead_k_coverage_curve",
-    "nation_settlement_netting_efficiency",
-    "part_price_ladder_gaps",
-    "docs_hash_shard_balance",
-    "customer_segment_bh_fdr",
-    "orders_condorcet_priority_winner",
-    "join_order_cost_enumeration",
-    "events_markov_next_event_accuracy",
-    "lineitem_rounding_reconciliation",
-    "graph_weight_percolation_reach",
-    "dq_volume_dod_anomaly",
-    "emb_pq_code_balance",
-    "customer_supply_shock_exposure",
-    "docs_template_prefix_census",
-    "lineitem_unit_price_consistency_audit",
-    "events_ab_novelty_decay",
-    "docs_simhash_width_collisions",
-    "docs_dup_cluster_size_powerlaw",
-    "customer_order_count_nbd_fit",
-    "customer_first_order_ltv_corr",
-]
+def last_line(summary: dict, headline: dict[str, float]) -> str:
+    """The compact final line: `summary` without family subtotals, plus the
+    named headline map, or `queries_dropped` when the map does not fit."""
+    compact = {
+        k: v for k, v in summary.items() if not k.startswith("value_extended")
+    }
+    line = json.dumps({**compact, "queries": headline})
+    if len(line) > LAST_LINE_CAP:
+        line = json.dumps({**compact, "queries_dropped": True})
+    return line
 
 
 def main() -> int:
@@ -885,70 +266,15 @@ def main() -> int:
 
     timings = run(HEADLINE)
     total = round(sum(timings.values()), 3)
-    # extended families, in registration order; summary carries one
-    # subtotal per family (1-decimal — the per-query map on the first
-    # output line keeps 3-decimal grain; the trim buys the final line
-    # ~90 bytes of tail-cap headroom for the hq map, VERDICT r11 item 1)
-    family_lists = [
-        ("value_extended", EXTENDED),
-        ("value_extended_r3", EXTENDED_R3),
-        ("value_extended_r5", EXTENDED_R5),
-        ("value_extended_r5c", EXTENDED_R5C),
-        ("value_extended_r5d", EXTENDED_R5D),
-        ("value_extended_r6", EXTENDED_R6),
-        ("value_extended_r6b", EXTENDED_R6B),
-        ("value_extended_r6c", EXTENDED_R6C),
-        ("value_extended_r6d", EXTENDED_R6D),
-        ("value_extended_r6e", EXTENDED_R6E),
-        ("value_extended_r6f", EXTENDED_R6F),
-        ("value_extended_r6g", EXTENDED_R6G),
-        ("value_extended_r6h", EXTENDED_R6H),
-        ("value_extended_r6i", EXTENDED_R6I),
-        ("value_extended_r6j", EXTENDED_R6J),
-        ("value_extended_r6k", EXTENDED_R6K),
-        ("value_extended_r6l", EXTENDED_R6L),
-        ("value_extended_r7", EXTENDED_R7),
-        ("value_extended_r7b", EXTENDED_R7B),
-        ("value_extended_r7c", EXTENDED_R7C),
-        ("value_extended_r7d", EXTENDED_R7D),
-        ("value_extended_r7e", EXTENDED_R7E),
-        ("value_extended_r7f", EXTENDED_R7F),
-        ("value_extended_r7g", EXTENDED_R7G),
-        ("value_extended_r7h", EXTENDED_R7H),
-        ("value_extended_r7i", EXTENDED_R7I),
-        ("value_extended_r7j", EXTENDED_R7J),
-        ("value_extended_r7k", EXTENDED_R7K),
-        ("value_extended_r7l", EXTENDED_R7L),
-        ("value_extended_r7m", EXTENDED_R7M),
-        ("value_extended_r7n", EXTENDED_R7N),
-        ("value_extended_r7o", EXTENDED_R7O),
-        ("value_extended_r7p", EXTENDED_R7P),
-        ("value_extended_r7q", EXTENDED_R7Q),
-        ("value_extended_r7r", EXTENDED_R7R),
-        ("value_extended_r7s", EXTENDED_R7S),
-        ("value_extended_r7t", EXTENDED_R7T),
-        ("value_extended_r7u", EXTENDED_R7U),
-        ("value_extended_r7v", EXTENDED_R7V),
-        ("value_extended_r7w", EXTENDED_R7W),
-        ("value_extended_r7x", EXTENDED_R7X),
-        ("value_extended_r7y", EXTENDED_R7Y),
-        ("value_extended_r7z", EXTENDED_R7Z),
-        ("value_extended_r7aa", EXTENDED_R7AA),
-        ("value_extended_r7ab", EXTENDED_R7AB),
-        ("value_extended_r8", EXTENDED_R8),
-    ]
     all_timings = dict(timings)
+    # one subtotal per family (1-decimal; the first line's per-query map
+    # keeps 3-decimal grain). family_t0 stamps each family's wall-clock
+    # start: a transient whole-VM stall mid-battery slows every query of
+    # the families it overlaps while the pre/post calibrations stay flat,
+    # and the stamps place it in time.
     family_totals: dict[str, float] = {}
-    # Per-family start timestamps (r13, VERDICT r12 item 7): the r12
-    # artifacts show a battery whose r6f+r6g families ran uniformly 3-7×
-    # slower — every query in both families, no single mover — while the
-    # pre/post calibration brackets stayed flat, i.e. a transient
-    # whole-VM stall mid-battery that the brackets cannot see. Wall-clock
-    # family start times (first line only; the driver tail never sees
-    # them) let such a stall be localized in time instead of argued from
-    # calibration.
     family_t0: dict[str, float] = {}
-    for key, names in family_lists:
+    for key, names in families(registry).items():
         family_t0[key] = round(time.time(), 1)
         fam = run(names)
         all_timings.update(fam)
@@ -967,10 +293,8 @@ def main() -> int:
         # per-query headline timings (VERDICT r11 item 1): an ORDERED
         # integer array keyed to the committed HEADLINE list above —
         # hq_cs[i] is the min-of-2 wall for HEADLINE[i] in CENTISECONDS.
-        # Emitted as a positional integer array (not name→sec) so all 28
-        # entries fit the driver's ~2000-byte stdout tail alongside the
-        # 45 family subtotals; join against HEADLINE in this file to
-        # attribute any headline_per_calib move to named queries.
+        # Kept next to the named `queries` map so older positional
+        # records stay comparable.
         "hq_cs": [int(round(timings[n] * 100)) for n in HEADLINE],
         "calib_sec": round(calib, 3),
         # the cross-VM-comparable headline (lower is better); see the
@@ -993,13 +317,8 @@ def main() -> int:
         "gc_forced_ms": int(forced_acc["ms"]),
         "sf": sf,
     }
-    # Full per-query map + family subtotals + slowest-5 FIRST (for
-    # humans / local archives — this line may exceed the driver's
-    # stdout tail), compact driver-parseable summary LAST: the driver
-    # preserves only the final ~2000 bytes of stdout and JSON-parses
-    # the last line, so the line carrying the headline value must be
-    # small enough to survive that tail intact (BENCH_r05's single 5KB
-    # line lost its head, including `value`).
+    # full record first (may exceed the ~2000-byte tail), compact
+    # summary with the named headline map last — see the module docstring
     slowest = dict(
         (k, round(v, 2))
         for k, v in sorted(all_timings.items(), key=lambda kv: -kv[1])[:5]
@@ -1014,28 +333,7 @@ def main() -> int:
             }
         )
     )
-    # FINAL line (r13, VERDICT r12 item 1 — measurement-attribution fix,
-    # declared in OPTIMIZATION_r13.md): r12's final line carried only the
-    # positional hq_cs centisecond array, which the driver cannot join to
-    # names, so PERF_r12.per_query came back EMPTY and no per-query
-    # round-over-round or 8-vs-32-core comparison was possible. The named
-    # 28-entry headline map now lives HERE under the contract's `queries`
-    # key (seconds, same 3-decimal grain as the first line); the 45
-    # value_extended_* family subtotals move UP to the first line because
-    # names + subtotals cannot both fit under the ~2000-byte tail cap and
-    # names are what the driver attributes with. Timing methodology is
-    # UNCHANGED (same queries, same min-of-2 noop-sink windows); totals
-    # stay keyed identically (metric/value/unit/headline_n/...), and
-    # hq_cs is kept so r12's positional record stays comparable.
-    last_summary = {
-        k: v for k, v in summary.items() if not k.startswith("value_extended")
-    }
-    last_line = json.dumps(
-        {**last_summary, "queries": {n: timings[n] for n in HEADLINE}}
-    )
-    if len(last_line) > 1980:  # belt-and-braces: never ship a torn head
-        last_line = json.dumps(last_summary)
-    print(last_line)
+    print(last_line(summary, {n: timings[n] for n in HEADLINE}))
     return 0
 
 

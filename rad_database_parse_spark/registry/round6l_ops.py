@@ -1,5 +1,5 @@
 """Round-6l operators: corpus divergence, embedding-space geometry,
-and seasonality strength — the first `_WINDOW_R9` seeds.
+and seasonality strength.
 
 Same parity contract as the rest of the registry."""
 

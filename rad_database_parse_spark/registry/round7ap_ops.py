@@ -50,6 +50,7 @@ _VALUES = ",\n      ".join(
       {_VALUES}) AS t(doc_filename, n_rows)
     ORDER BY doc_filename
     """,
+    inputs=(_DOCS_DIR,),
 )
 def pdf_real_lattice_goldens(spark: SparkSession, sf_dir: str):
     """A1→A14 end-to-end on REAL reference PDFs: binaryFile scan →

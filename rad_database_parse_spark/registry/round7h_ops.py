@@ -1,7 +1,7 @@
 """Round-7h operators: video scene cuts (completing the multimodal
 audio/image/video matrix), a Kleinberg-style burst fold, inverted-index
 segment-merge accounting, a TOPSIS supplier scorecard, and an ensemble
-anomaly vote — the final five `_WINDOW_R9` seeds (window now full at 50).
+anomaly vote.
 
 Parity contract as everywhere (registry/__init__.py float policy).
 """

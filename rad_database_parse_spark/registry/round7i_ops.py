@@ -1,8 +1,7 @@
 """Round-7i operators: ratio-scaled synthetic control, CVaR expected
 shortfall, a deterministic differential-privacy count release,
 Holt-Winters additive smoothing as a distributed array fold, cross-price
-elasticity, and an nDCG retrieval evaluation — the first `_WINDOW_R10`
-seeds.
+elasticity, and an nDCG retrieval evaluation.
 
 Parity contract as everywhere (registry/__init__.py float policy).
 """

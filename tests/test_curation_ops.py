@@ -148,10 +148,8 @@ def test_cms_overestimates_and_ranks_deterministically(spark, sf_dir):
 
 def test_curation_ops_kept_their_driver_window_pin(spark):
     # These ten got their first driver CORRECTNESS rows in round 5 (all
-    # green). They must stay pinned in _WINDOW_R5 — the rotation's record
-    # of which round covered them — and registered under the same names.
-    from rad_database_parse_spark.registry import _WINDOW_R5
-
+    # green); a rename would orphan those rows, so they must stay
+    # registered under the same names.
     names = list(all_queries())
     for q in (
         "docs_cross_source_overlap",
@@ -165,7 +163,7 @@ def test_curation_ops_kept_their_driver_window_pin(spark):
         "events_ewma_smoothing",
         "nation_supplier_hhi",
     ):
-        assert q in _WINDOW_R5 and q in names
+        assert q in names
 
 
 def test_ewma_equals_recursive_definition(spark, sf_dir):

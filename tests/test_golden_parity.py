@@ -16,6 +16,7 @@ here), so parity is checked in two layers:
    dedup semantics drift from the reference's, this distribution breaks.
 """
 
+import os
 import sqlite3
 
 import pytest
@@ -49,6 +50,9 @@ GOLDEN_TOTAL = 532
 NOISE_ONLY_FILES = ["2005-nasa-compendium-b.pdf", "2019-nasa-compendium.pdf"]
 
 
+@pytest.mark.skipif(
+    not os.path.exists(GOLDEN_DB), reason=f"missing input: {GOLDEN_DB}"
+)
 def test_reference_golden_artifact_matches_baseline_record():
     con = sqlite3.connect(f"file:{GOLDEN_DB}?mode=ro", uri=True)
     try:

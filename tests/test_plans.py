@@ -2,6 +2,8 @@
 100 TB — filter pushdown to the parquet scan, column pruning, broadcast
 joins for dimensions, codegen coverage."""
 
+import warnings
+
 from pyspark.sql import functions as F
 
 from rad_database_parse_spark.plans import (
@@ -475,6 +477,10 @@ def test_unpartitioned_window_whitelist_does_not_grow(spark, sf_dir):
     offenders = {}
     for name, qd in all_queries().items():
         if name in eager:
+            continue
+        missing = qd.missing_inputs()
+        if missing:  # not runnable here; reported, not silently dropped
+            warnings.warn(f"{name} skipped, missing input: {missing[0]}")
             continue
         df = qd.fn(spark, sf_dir)
         n = unpartitioned_window_count(df)

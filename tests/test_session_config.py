@@ -1,16 +1,12 @@
 """Session-factory hygiene (ADVICE r10, GC default r12).
 
-1. ``_merge_driver_java_options``: the ReservedCodeCacheSize fix must
-   never clobber externally configured driver JVM options, and an
-   ``extra_conf`` that sets its own ``extraJavaOptions`` must not
-   silently drop the code-cache flag (unless it carries an explicit
-   ReservedCodeCacheSize of its own).
-2. ``clear_caches``: catalog ``clearCache()`` does not release
+1. ``clear_caches``: catalog ``clearCache()`` does not release
    RDD-level persists (``localCheckpoint`` blocks live outside the
    CacheManager); the gate/bench hygiene sweep must release both.
-3. ``_merge_gc_flag``: the r12 ParallelGC default must never clobber
-   an explicit collector choice and must honor the
-   SPARK_GRAFT_STOCK_GC=1 revert knob (tools/ab_r12_gc.py).
+2. ``_merge_gc_flag``: the r12 ParallelGC default must never clobber
+   an explicit collector choice.
+3. ``_env_conf``: the ``SPARK_GRAFT_CONF`` A/B hook parses pairs and
+   rejects JVM options loudly.
 """
 
 from __future__ import annotations
@@ -20,10 +16,8 @@ from pyspark import StorageLevel
 import pytest
 
 from rad_database_parse_spark.session import (
-    _CODE_CACHE_FLAG,
     _GC_FLAG,
     _env_conf,
-    _merge_driver_java_options,
     _merge_gc_flag,
     clear_caches,
 )
@@ -59,61 +53,17 @@ def test_env_conf_rejects_jvm_options(monkeypatch):
         _env_conf()
 
 
-def test_gc_flag_appended_by_default(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
+def test_gc_flag_appended_by_default():
     assert _merge_gc_flag("") == _GC_FLAG
     assert _merge_gc_flag("-Xss4m") == f"-Xss4m {_GC_FLAG}"
 
 
-def test_gc_flag_never_clobbers_explicit_collector(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
+def test_gc_flag_never_clobbers_explicit_collector():
     # + and - forms, any collector name
     assert _merge_gc_flag("-XX:+UseZGC") == "-XX:+UseZGC"
     assert _merge_gc_flag("-XX:+UseG1GC -Xss4m") == "-XX:+UseG1GC -Xss4m"
     assert _merge_gc_flag("-XX:-UseG1GC") == "-XX:-UseG1GC"
     assert _merge_gc_flag(_GC_FLAG) == _GC_FLAG
-
-
-def test_gc_flag_stock_knob_reverts(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STOCK_GC", "1")
-    assert _merge_gc_flag("") == ""
-    assert _merge_gc_flag("-Xss4m") == "-Xss4m"
-
-
-def test_merge_defaults_to_flag_only():
-    opts, remaining = _merge_driver_java_options(None)
-    assert opts == _CODE_CACHE_FLAG
-    assert remaining == {}
-
-
-def test_merge_appends_to_env_options():
-    opts, _ = _merge_driver_java_options(None, "-Xss4m -Dfoo=bar")
-    assert opts.startswith("-Xss4m -Dfoo=bar ")
-    assert opts.endswith(_CODE_CACHE_FLAG)
-
-
-def test_merge_extra_conf_wins_over_env_but_keeps_flag():
-    opts, remaining = _merge_driver_java_options(
-        {"spark.driver.extraJavaOptions": "-Xmx1g", "other.key": "v"},
-        "-Xss4m",
-    )
-    assert "-Xss4m" not in opts  # extra_conf takes precedence over env
-    assert opts == f"-Xmx1g {_CODE_CACHE_FLAG}"
-    # the consumed extraJavaOptions entry must not be re-applied later
-    assert remaining == {"other.key": "v"}
-
-
-def test_merge_respects_explicit_code_cache_size():
-    opts, _ = _merge_driver_java_options(
-        {"spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=256m"}
-    )
-    assert opts == "-XX:ReservedCodeCacheSize=256m"
-    assert "512m" not in opts
-
-
-def test_merge_env_explicit_code_cache_size_respected():
-    opts, _ = _merge_driver_java_options(None, "-XX:ReservedCodeCacheSize=1g")
-    assert opts == "-XX:ReservedCodeCacheSize=1g"
 
 
 def test_clear_caches_releases_localcheckpoint_blocks(spark):

@@ -1,79 +1,48 @@
-"""Driver-window canary: CORRECTNESS_r12.json landed fully green — 50/50
-rows+schema+hash on the round-12 window (_WINDOW_R11 tail +
-_WINDOW_R12[:45]) — so the round-13 rotation drains the never-checked
-backlog (VERDICT r12 item 6): the displaced _WINDOW_R12 tail (5) and
-_WINDOW_R13 (27) lead, and _REFRESH_R13 (the 18 stalest greens, all
-last driver-checked in round 1) fills the window to exactly 50. A green
-CORRECTNESS_r13 therefore completes 570/570 cumulative driver coverage.
-An import reorder or a family re-registration must not be able to
-silently re-run an already-green window (VERDICT r2 item 7).
+"""Correctness-window canary: the correctness gate checks the first 50
+names of ``all_queries()``, and ``registry.WINDOW`` pins them.
+
+WINDOW must equal the stalest-first derivation over the committed
+CORRECTNESS_r*.json files: the 50 registered queries whose latest
+correctness row is oldest (a never-checked query counts as oldest), ties
+broken by name. When a new CORRECTNESS file lands, the derivation test
+fails and prints the rotated list to paste into ``registry/__init__.py``.
+An import reorder must not be able to re-run an already-green window.
 """
 
-from rad_database_parse_spark.registry import (
-    _REFRESH_R13,
-    _REPIN_R8,
-    _REPIN_R10,
-    _WINDOW_R3,
-    _WINDOW_R4,
-    _WINDOW_R5,
-    _WINDOW_R6,
-    _WINDOW_R7,
-    _WINDOW_R8,
-    _WINDOW_R9,
-    _WINDOW_R10,
-    _WINDOW_R11,
-    _WINDOW_R12,
-    _WINDOW_R13,
-    all_queries,
-)
+import glob
+import json
+import os
+import re
+
+import pytest
+
+from rad_database_parse_spark.registry import WINDOW, all_queries
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CORRECTNESS = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
 
 
-def _expected_order():
-    seen = set()
-    return [
-        n
-        for n in _WINDOW_R12[45:]
-        + _WINDOW_R13
-        + _REFRESH_R13
-        + _WINDOW_R12
-        + _WINDOW_R11
-        + _WINDOW_R10
-        + _WINDOW_R9
-        + _WINDOW_R8
-        + _WINDOW_R7
-        + _WINDOW_R6
-        + _WINDOW_R5
-        + _WINDOW_R3
-        + _WINDOW_R4
-        if not (n in seen or seen.add(n))
-    ]
+def stalest_first(names, files):
+    """``names`` ordered by the round of their latest row in ``files``,
+    oldest first (never checked = round 0), then by name."""
+    latest: dict[str, int] = {}
+    for f in files:
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
+        with open(f) as fh:
+            for q in json.load(fh):
+                latest[q] = max(latest.get(q, 0), rnd)
+    return sorted(names, key=lambda n: (latest.get(n, 0), n))
 
 
-def test_r13_window_leads():
+def test_window_leads_all_queries():
     names = list(all_queries())
-    # positions 1-5: the _WINDOW_R12 tail displaced by the r12 rotation
-    # (their first-ever driver rows); positions 6-32: all of _WINDOW_R13;
-    # positions 33-50: the 18 stalest greens. Together they are exactly
-    # the driver's 50-query correctness window for round 13.
-    assert names[:5] == _WINDOW_R12[45:]
-    assert names[5:32] == _WINDOW_R13
-    assert names[32:50] == _REFRESH_R13
-    # the closed windows are pinned full at exactly 50
-    assert len(_WINDOW_R6) == 50
-    assert len(_WINDOW_R7) == 50
-    assert len(_WINDOW_R8) == 50
-    assert len(_WINDOW_R9) == 50
-    assert len(_WINDOW_R10) == 50
-    assert len(_WINDOW_R11) == 50
-    assert len(_WINDOW_R12) == 50
-    # the backlog-draining window must land at exactly the driver's 50
-    assert 5 + len(_WINDOW_R13) + len(_REFRESH_R13) == 50
+    assert names[:50] == WINDOW
 
 
 def test_full_pinned_order_holds():
+    # WINDOW first, then every other query in name order
     names = list(all_queries())
-    expected = _expected_order()
-    assert names[: len(expected)] == expected
+    assert names == WINDOW + sorted(set(names) - set(WINDOW))
 
 
 def test_window_is_immune_to_direct_module_imports():
@@ -82,65 +51,34 @@ def test_window_is_immune_to_direct_module_imports():
     import rad_database_parse_spark.registry.core_relational  # noqa: F401
     import rad_database_parse_spark.registry.llm_ops  # noqa: F401
 
-    assert list(all_queries())[:5] == _WINDOW_R12[45:]
-    assert list(all_queries())[5:32] == _WINDOW_R13
+    assert list(all_queries())[:50] == WINDOW
 
 
 def test_every_window_name_unique_and_registered():
-    for window in (
-        _REPIN_R8,
-        _REPIN_R10,
-        _REFRESH_R13,
-        _WINDOW_R3,
-        _WINDOW_R4,
-        _WINDOW_R5,
-        _WINDOW_R6,
-        _WINDOW_R7,
-        _WINDOW_R8,
-        _WINDOW_R9,
-        _WINDOW_R10,
-        _WINDOW_R11,
-        _WINDOW_R12,
-        _WINDOW_R13,
-    ):
-        assert len(set(window)) == len(window)
-    registered = set(all_queries())
-    assert (
-        set(
-            _REPIN_R8
-            + _REPIN_R10
-            + _REFRESH_R13
-            + _WINDOW_R3
-            + _WINDOW_R4
-            + _WINDOW_R5
-            + _WINDOW_R6
-            + _WINDOW_R7
-            + _WINDOW_R8
-            + _WINDOW_R9
-            + _WINDOW_R10
-            + _WINDOW_R11
-            + _WINDOW_R12
-            + _WINDOW_R13
-        )
-        <= registered
+    assert len(WINDOW) == len(set(WINDOW)) == 50
+    assert set(WINDOW) <= set(all_queries())
+
+
+@pytest.mark.skipif(not CORRECTNESS, reason="no committed CORRECTNESS_r*.json")
+def test_window_is_the_stalest_first_derivation():
+    expected = stalest_first(all_queries(), CORRECTNESS)[:50]
+    listing = "".join(f'    "{n}",\n' for n in expected)
+    assert WINDOW == expected, (
+        "the window is due to rotate; set registry.WINDOW to:\n"
+        f"WINDOW = [\n{listing}]"
     )
 
 
 def test_r13_window_completes_cumulative_coverage():
     # the union of every CORRECTNESS file's keys plus the first 50 of
-    # this rotation must cover the whole registry — the property VERDICT
-    # r12 item 6 asks this round to close. Uses the committed artifacts,
-    # so the test is self-verifying against the real driver history.
-    import glob
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    if not files:  # fresh clone without artifacts: nothing to assert
+    # this rotation must cover the whole registry. Uses the committed
+    # artifacts, so the test is self-verifying against the real
+    # correctness history.
+    if not CORRECTNESS:  # fresh clone without artifacts: nothing to assert
         return
     checked: set[str] = set()
-    for f in files:
-        checked.update(json.load(open(f)))
+    for f in CORRECTNESS:
+        with open(f) as fh:
+            checked.update(json.load(fh))
     names = list(all_queries())
     assert checked.union(names[:50]) >= set(names)
